@@ -9,11 +9,10 @@ first-match-exclusive.
 
 Spark design: a single pass computes, per row, the ARRAY of matching
 sink names, then ``explode`` fans the row out. That is multicast with
-copy semantics at zero extra scans — the alternative (N filtered
-writes off one cached parent) is provided by the multicast writer in
-sinks/writer.py for the write path. At 100 TB the explode variant is
-one shuffle-free narrow stage; the per-sink write then partitions by
-``sink`` so each sink's files are contiguous.
+copy semantics at zero extra scans. At 100 TB the explode is one
+shuffle-free narrow stage; the multicast writer in sinks/writer.py
+then writes the exploded frame once, partitioned by sink, so each
+sink's files are contiguous.
 """
 
 from __future__ import annotations

@@ -54,16 +54,21 @@ def pipeline_from_yaml(src: str):
     tables per the north star) and external-service flushers stay out
     of scope.
 
-    ``src`` is YAML text, or a path to a .yaml file.
+    ``src`` is YAML text, or a path to a config file. A one-line
+    ``*.yaml``/``*.yml`` string is always a path, so a missing file
+    raises ``FileNotFoundError`` naming it; a document that is not a
+    mapping raises ``ValueError``.
     """
     import os
 
     import yaml
 
-    if "\n" not in src and os.path.exists(src):
+    if "\n" not in src and (src.endswith((".yaml", ".yml")) or os.path.exists(src)):
         with open(src) as f:
             src = f.read()
     cfg = yaml.safe_load(src) or {}
+    if not isinstance(cfg, dict):
+        raise ValueError(f"YAML config must be a mapping, got {type(cfg).__name__}")
     if not cfg.get("enable", True):
         return (lambda df: df), list(cfg.get("flushers") or [])
     steps = []

@@ -4,37 +4,28 @@ The reference's flusher layer: router fans event groups out to N
 flushers, each with its own batching/serialization
 (core/collection_pipeline/route/Router.cpp:51-85, Batcher.h:131-171).
 
-Spark re-expression — two strategies:
+Spark re-expression: the routed frame (already exploded per sink by
+``route_stage``) is written in ONE pass with ``partitionBy`` on the
+sink column, so every sink is a directory of one parquet dataset and
+the upstream plan runs once — no cache, no per-sink filtered rescans.
 
-  * ``write_partitioned``: ONE pass — the routed frame (already
-    exploded per sink) writes with ``partitionBy(sink)``; every sink
-    is a hive-partition directory of one parquet dataset. At 100 TB
-    this is the right default: a single scan, a single shuffle-free
-    write, per-sink files contiguous for downstream partition pruning.
-  * ``write_per_sink``: N filtered writes off one persisted upstream —
-    matches the reference's independent-flusher failure isolation
-    (one sink's write failure doesn't poison the others) and lets each
-    sink choose format/layout. Costs one cache materialization.
-
-Iceberg: if a catalog is configured the same frames go through
-``writeTo(...)`` (atomic snapshot commits); the sandbox image lacks
-the Iceberg jars so parquet is the substrate, behind one import-try.
+  * ``write_partitioned`` keeps Spark's hive layout (``sink=<s>/``)
+    for readers that discover the sink from the partition path.
+  * ``write_per_sink`` is the deploy layout ``<out>/<s>/part-*.parquet``:
+    the same one-pass write, then each ``__sink__=<s>`` directory is
+    renamed to ``<s>``. The rename keeps the deploy output's layout:
+    consumers address a sink's output by the sink name, as the
+    reference addresses a flusher, and the files hold the routed
+    columns without the sink column, as a per-flusher writer emits.
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def have_iceberg(spark) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.catalog.Catalog  # noqa: SLF001
-        return True
-    except Exception:
-        return False
 
 
 def write_partitioned(
@@ -56,31 +47,27 @@ def write_partitioned(
     )
 
 
-def write_per_sink(
-    routed: DataFrame,
-    out_dir: str,
-    sinks: list[str],
-    sink_col: str = "__sink__",
-    mode: str = "overwrite",
-    order_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-) -> dict[str, str]:
-    """N filtered writes off one persisted parent. Rows are
-    sortWithinPartitions(conv_id, turn_idx) — the reference's
-    aggregator_context per-source ordering guarantee
-    (aggregator_context.go:38-57)."""
-    routed = routed.persist()
-    try:
-        paths = {}
-        for sink in sinks:
-            path = os.path.join(out_dir, sink)
-            (
-                routed.filter(F.col(sink_col) == sink)
-                .drop(sink_col)
-                .sortWithinPartitions(*order_cols)
-                .write.mode(mode)
-                .parquet(path)
-            )
-            paths[sink] = path
-        return paths
-    finally:
-        routed.unpersist()
+def write_per_sink(routed: DataFrame, out_dir: str) -> dict[str, str]:
+    """Write ``routed`` once, partitioned by ``__sink__``, and rename
+    each ``__sink__=<s>`` dir to ``<s>``; returns sink -> dir.
+
+    Rows are sortWithinPartitions(__sink__, conv_id, turn_idx): the
+    sink key leads because the partitioned writer needs each task's
+    rows grouped by sink, and each file comes out in (conv_id,
+    turn_idx) order — the reference's aggregator_context per-source
+    ordering guarantee (aggregator_context.go:38-57)."""
+    (
+        routed.sortWithinPartitions("__sink__", "conv_id", "turn_idx")
+        .write.mode("overwrite")
+        .partitionBy("__sink__")
+        .parquet(out_dir)
+    )
+    prefix = "__sink__="
+    paths = {}
+    for name in os.listdir(out_dir):
+        if name.startswith(prefix):
+            # partition values are path-escaped (ExternalCatalogUtils)
+            sink = unquote(name[len(prefix):])
+            paths[sink] = os.path.join(out_dir, sink)
+            os.rename(os.path.join(out_dir, name), paths[sink])
+    return paths

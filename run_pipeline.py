@@ -6,13 +6,16 @@ Ships exactly as the north rule requires::
     ./submit.sh --input /root/testdata/sf0.01 --output /tmp/out
     # == spark-submit --py-files ilogtail_spark.zip run_pipeline.py ...
 
-Runs parse → enrich → route on the transcripts table, writes per-sink
-routed rows (stable (conv_id, turn_idx) order within files), per-sink
-aggregates, the per-tool hourly histogram, and a lineage/parse-rate
-metrics table. ``--resume`` processes conv_id hash buckets through the
+Runs parse → enrich → route on the transcripts table and writes the
+routed rows once, as ``routed/<sink>/part-*.parquet`` (stable
+(conv_id, turn_idx) order within files); per-sink aggregates, the
+per-tool hourly histogram and a lineage/parse-rate metrics table are
+computed from those files, so the input is read once and nothing is
+cached. ``--resume`` processes conv_id hash buckets through the
 commit log so a killed run restarts without reprocessing or
 duplicating rows (CheckPointManager / RangeCheckpoint semantics,
-core/file_server/checkpoint/CheckPointManager.h:40-85).
+core/file_server/checkpoint/CheckPointManager.h:40-85), writing
+``routed/bucket=<k>/`` and aggregating it the same way.
 """
 
 from __future__ import annotations
@@ -38,6 +41,8 @@ def main(argv: list[str] | None = None) -> None:
 
     # under spark-submit the session (master, deploy conf) comes from
     # the launcher; get_spark only fills in engine-level SQL conf
+    from pyspark.sql import functions as F
+
     from ilogtail_spark.plans.checkpoint import run_with_checkpoint
     from ilogtail_spark.plans.metrics import StageMetrics
     from ilogtail_spark.plans.pipeline import (
@@ -63,8 +68,6 @@ def main(argv: list[str] | None = None) -> None:
 
     yaml_transform = None
     if args.config:
-        from pyspark.sql import functions as F
-
         from ilogtail_spark.plans.pipeline import pipeline_from_yaml
 
         yaml_transform, _flushers = pipeline_from_yaml(args.config)
@@ -91,22 +94,25 @@ def main(argv: list[str] | None = None) -> None:
         d = enrich_stage(d, spark)
         return route_stage(d)
 
+    routed_dir = os.path.join(args.output, "routed")
     if args.resume:
-        result = run_with_checkpoint(
-            df,
-            os.path.join(args.output, "routed"),
-            pipe,
-            num_buckets=args.num_buckets,
+        routed_summary = run_with_checkpoint(
+            df, routed_dir, pipe, num_buckets=args.num_buckets
         )
-        routed = spark.read.parquet(
-            os.path.join(args.output, "routed", "bucket=*")
-        )
-        routed_summary = result
+        routed = spark.read.parquet(os.path.join(routed_dir, "bucket=*"))
     else:
-        routed = pipe(df).persist()
-        sinks = [r["__sink__"] for r in routed.select("__sink__").distinct().collect()]
-        paths = write_per_sink(routed, os.path.join(args.output, "routed"), sinks)
+        routed = pipe(df)
+        paths = write_per_sink(routed, routed_dir)
         routed_summary = {"sinks": sorted(paths)}
+        # routed/<sink>/part-*.parquet: the sink is the file's dir name;
+        # the known schema also reads back an empty run (no sink dirs)
+        routed = (
+            spark.read.schema(routed.drop("__sink__").schema)
+            .parquet(*paths.values())
+            .withColumn(
+                "__sink__", F.element_at(F.split("_metadata.file_path", "/"), -2)
+            )
+        )
 
     if yaml_transform is None:
         # the built-in pipeline's summary tables assume its parsed

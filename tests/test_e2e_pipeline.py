@@ -4,8 +4,13 @@ log_field.go, log_order.go): per-sink routed-row set equality,
 per-sink aggregate counts, per-turn text equality under stable
 (conv_id, turn_idx) ordering, and metrics counters."""
 
+import glob
+import os
 import re
+from collections import Counter
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from ilogtail_spark.plans.metrics import StageMetrics
@@ -87,25 +92,71 @@ def test_e2e_routed_set_equality(spark, sf_dir, tmp_path):
 def test_e2e_write_and_order(spark, sf_dir, tmp_path):
     routed = route_stage(enrich_stage(parse_stage(derive_transcripts(spark, sf_dir)), spark))
 
-    # strategy 1: one-pass partitionBy write
+    # hive layout: one-pass partitionBy write
     out1 = str(tmp_path / "partitioned")
     write_partitioned(routed, out1)
     back = spark.read.parquet(out1)
     assert back.count() == routed.count()
     assert back.select("sink").distinct().count() == routed.select("__sink__").distinct().count()
 
-    # strategy 2: per-sink writes with stable (conv_id, turn_idx) order
+    # deploy layout: the same one-pass write, one <out>/<sink>/ dir per sink
     out2 = str(tmp_path / "per_sink")
-    paths = write_per_sink(routed, out2, ["sink_errors", "sink_all"])
+    paths = write_per_sink(routed, out2)
+    sinks = {r["__sink__"] for r in routed.select("__sink__").distinct().collect()}
+    assert set(paths) == sinks
     errors = spark.read.parquet(paths["sink_errors"])
     assert errors.count() == routed.filter(F.col("__sink__") == "sink_errors").count()
 
-    # per-turn text equality under stable ordering vs source
-    src = derive_transcripts(spark, sf_dir).orderBy("conv_id", "turn_idx").collect()
-    got = spark.read.parquet(paths["sink_all"]).orderBy("conv_id", "turn_idx").collect()
-    assert len(src) == len(got)
-    for a, b in zip(src, got):
-        assert (a["conv_id"], a["turn_idx"], a["text"]) == (b["conv_id"], b["turn_idx"], b["text"])
+    # every written file is already in (conv_id, turn_idx) order: the
+    # reference's per-source ordering (aggregator_context.go:38-57)
+    for path in paths.values():
+        files = glob.glob(os.path.join(path, "*.parquet"))
+        assert files
+        for f in files:
+            t = pq.read_table(f, columns=["conv_id", "turn_idx"]).to_pydict()
+            keys = list(zip(t["conv_id"], t["turn_idx"]))
+            assert keys == sorted(keys), f
+
+    # per-turn text equality vs source
+    src = sorted((r["conv_id"], r["turn_idx"], r["text"]) for r in derive_transcripts(spark, sf_dir).collect())
+    got = sorted((r["conv_id"], r["turn_idx"], r["text"]) for r in spark.read.parquet(paths["sink_all"]).collect())
+    assert src == got
+
+
+def test_deploy_batch_and_resume(spark, sf_dir, tmp_path):
+    """run_pipeline.main, batch and --resume: both route every row the
+    oracle routes and write the same summary tables."""
+    import run_pipeline
+
+    want: dict[str, set] = {}
+    for e in python_oracle([r.asDict() for r in derive_transcripts(spark, sf_dir).collect()]):
+        want.setdefault(e["sink"], set()).add((e["conv_id"], e["turn_idx"]))
+    batch, resume = tmp_path / "batch", tmp_path / "resume"
+    # main() re-applies the session builder's SQL conf to the shared session
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        run_pipeline.main(["--input", sf_dir, "--output", str(batch)])
+        run_pipeline.main(["--input", sf_dir, "--output", str(resume),
+                           "--resume", "--num-buckets", "3"])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+
+    routed_dir = batch / "routed"
+    dirs = {p.name for p in routed_dir.iterdir() if p.is_dir()}
+    assert dirs == set(want) == {"default", "sink_all", "sink_errors", "sink_parse_fail", "sink_tools"}
+    resumed = spark.read.parquet(str(resume / "routed" / "bucket=*"))
+    for sink, keys in want.items():
+        for rows in (
+            spark.read.parquet(str(routed_dir / sink)).collect(),
+            resumed.filter(F.col("__sink__") == sink).collect(),
+        ):
+            got = [(r["conv_id"], r["turn_idx"]) for r in rows]
+            assert len(got) == len(keys) and set(got) == keys, sink
+
+    for table in ("sink_aggregates", "tool_histogram"):
+        a = Counter(map(tuple, spark.read.parquet(str(batch / table)).collect()))
+        b = Counter(map(tuple, spark.read.parquet(str(resume / table)).collect()))
+        assert a and a == b, table
 
 
 def test_metrics_observation(spark, sf_dir):
@@ -178,6 +229,21 @@ def test_yaml_config_disabled_is_identity(spark):
     transform, _ = pipeline_from_yaml("enable: false\nprocessors:\n  - Type: nope\n")
     df = spark.createDataFrame([(1,)], "x int")
     assert transform(df) is df
+
+
+def test_yaml_config_missing_path_is_reported(tmp_path):
+    from ilogtail_spark.plans.pipeline import pipeline_from_yaml
+
+    missing = str(tmp_path / "nope.yaml")
+    with pytest.raises(FileNotFoundError, match="nope.yaml"):
+        pipeline_from_yaml(missing)
+
+
+def test_yaml_config_not_a_mapping_is_rejected():
+    from ilogtail_spark.plans.pipeline import pipeline_from_yaml
+
+    with pytest.raises(ValueError, match="mapping"):
+        pipeline_from_yaml("- Type: processor_regex\n- Type: processor_json\n")
 
 
 REF_EXAMPLES = "/root/reference/example_config/data_pipelines"
