@@ -583,6 +583,7 @@ def _q_metric_pivot(spark: SparkSession, sf: str) -> DataFrame:
 def _q_geoip_range(spark: SparkSession, sf: str) -> DataFrame:
     """processor_geoip (processor_geoip.go:35-53): IP → location via
     a broadcast range join on a MaxMind-style range table."""
+    from ilogtail_spark.common import local_df
     from ilogtail_spark.operators.transform import geoip_enrich
 
     df = derive_transcripts(spark, sf).withColumn(
@@ -590,12 +591,13 @@ def _q_geoip_range(spark: SparkSession, sf: str) -> DataFrame:
         F.concat(F.lit("10."), (F.col("turn_idx") % 200).cast("string"), F.lit(".7.9")),
     )
     base = 10 * 16777216
-    ranges = spark.createDataFrame(
+    ranges = local_df(
+        spark,
         [
             (base + (k << 16), base + (k << 16) + 65535, f"C{k // 50}")
             for k in range(200)
         ],
-        ["ip_start", "ip_end", "country"],
+        "ip_start long, ip_end long, country string",
     )
     out = geoip_enrich(df, ranges, "client_ip")
     return out.groupBy("geo_country").agg(F.count(F.lit(1)).alias("n_rows"))

@@ -72,6 +72,21 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
+def local_df(spark, rows: list[tuple], ddl_schema: str) -> DataFrame:
+    """A small driver-side table as a JVM LocalRelation, whatever the
+    Arrow conf, empty ``rows`` included. ``createDataFrame`` on a list
+    builds a pickled Python RDD that each job reading it unpickles in a
+    Python worker, a broadcast included."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl_schema)
+    records = [dict(zip(schema.names, r)) for r in rows]
+    table = pa.Table.from_pylist(records, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
 def fmt_tokens_to_jdk(fmt: str, token_map: dict[str, str], dialect: str) -> str:
     """Translate a %-token datetime format (C strptime, MySQL
     date_parse, ...) to a JDK DateTimeFormatter pattern. Literal

@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ilogtail_spark.common import local_df
 from ilogtail_spark.operators.registry import cfg_pop, register
 
 
@@ -752,7 +753,7 @@ def load_geoip_csv(spark, path: str):
         [f"{header[0]} long", f"{header[1]} long"]
         + [f"{c} string" for c in header[2:]]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_df(spark, rows, schema)
 
 
 # platformmeta mock manager values (pkg/helper/platformmeta/mock.go) —
@@ -1426,9 +1427,8 @@ def _dictmap_factory(**cfg):
     handle_missing = cfg.get("HandleMissing", cfg.get("handle_missing", True))
 
     def run(df):
-        lookup = df.sparkSession.createDataFrame(
-            list(mapping.items()), ["_k", "_v"]
-        )
+        rows = [(str(k), str(v)) for k, v in mapping.items()]
+        lookup = local_df(df.sparkSession, rows, "_k string, _v string")
         return dict_map(
             df, lookup, source, dest,
             handle_missing=handle_missing, missing=missing, mode=mode,

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ilogtail_spark.common import local_df
 from ilogtail_spark.operators.parse import PARSE_OK_KEY
 
 
@@ -44,17 +45,11 @@ class StageMetrics:
         return rows
 
     def to_df(self, spark) -> DataFrame:
-        rows = self.collect()
-        if not rows:
-            return spark.createDataFrame(
-                [], "stage string, in_events_total long, out_failed_events_total long"
-            )
-        for r in rows:
-            r.setdefault("out_failed_events_total", None)
-        return spark.createDataFrame(
+        return local_df(
+            spark,
             [
-                (r["stage"], r["in_events_total"], r["out_failed_events_total"])
-                for r in rows
+                (r["stage"], r["in_events_total"], r.get("out_failed_events_total"))
+                for r in self.collect()
             ],
             "stage string, in_events_total long, out_failed_events_total long",
         )

@@ -5,7 +5,8 @@ This is the Spark re-expression of a reference collection config
 core/config/CollectionConfig.h:35-41) for the BASELINE.json north
 star. Every stage is a pure DataFrame transform; the whole
 pre-shuffle section (parse + enrich + route) fuses into ONE
-whole-stage-codegen map stage — the broadcast join adds no shuffle.
+whole-stage-codegen map stage — enrichment is a projection over
+literal maps, with no join and no broadcast job.
 
 Also provides the generic config-driven assembler: a list of
 {"type": <reference plugin name>, ...config} dicts composed through
@@ -27,13 +28,12 @@ from ilogtail_spark.operators.parse import (
     parse_regex_pandas,
 )
 from ilogtail_spark.operators.route import Route, route_multicast
-from ilogtail_spark.operators.transform import dict_map
 from ilogtail_spark.sources.transcripts import (
     GROK_FIELDS,
     GROK_PATTERN,
+    ROLE_LOOKUP,
+    TOOL_LOOKUP,
     derive_transcripts,
-    role_lookup_df,
-    tool_lookup_df,
 )
 
 PARSE_TYPES = {"status": "int", "latency_ms": "int"}
@@ -121,11 +121,19 @@ def parse_stage(df: DataFrame, engine: str = "dissect") -> DataFrame:
 
 
 def enrich_stage(df: DataFrame, spark: SparkSession) -> DataFrame:
-    """Broadcast-join dictmap enrichment by role and tool
-    (processor_dict_map semantics, HandleMissing → 'Unknown')."""
-    df = dict_map(df, role_lookup_df(spark), "role", "role_class")
-    df = dict_map(df, tool_lookup_df(spark), "tool", "tool_family")
-    return df
+    """Dictmap enrichment by role and tool (processor_dict_map; a NULL
+    or unlisted key gets Missing 'Unknown') as a projection over literal
+    maps, so it fuses into the parse→route codegen stage. A literal map
+    is a linear scan: right for 3-4 entries, while ``dict_map`` keeps a
+    broadcast join for MaxDictSize dicts. ``spark`` is unused."""
+
+    def lookup(key: str, pairs: list[tuple[str, str]]):
+        literal = F.create_map(*[F.lit(x) for kv in pairs for x in kv])
+        return F.coalesce(literal[F.col(key)], F.lit("Unknown"))
+
+    return df.withColumns(
+        {"role_class": lookup("role", ROLE_LOOKUP), "tool_family": lookup("tool", TOOL_LOOKUP)}
+    )
 
 
 def standard_routes() -> list[Route]:

@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of MemTotal in whole GiB, clamped to 1g-32g, leaving the
+    rest to off-heap, Python workers and the OS; 4g without meminfo."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except OSError:
+        return "4g"
+    return f"{min(32, max(1, kib // (2 * 1024 * 1024)))}g"
+
+
 def get_spark(
     app_name: str = "ilogtail_spark",
     cores: int | None = None,
@@ -41,7 +52,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # throughput collector: on this substrate G1 loses ~25% at

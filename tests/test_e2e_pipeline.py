@@ -89,6 +89,48 @@ def test_e2e_routed_set_equality(spark, sf_dir, tmp_path):
         assert agg[sink] == (exp_n, exp_f), sink
 
 
+def test_enrich_matches_dict_oracle(spark):
+    """Literal-map enrichment equals a Python dict lookup: 'system', an
+    unlisted tool and NULL role/tool all map to 'Unknown', the two
+    columns are appended in order as non-null strings."""
+    rows = [
+        (1, "user", "bash"),
+        (2, "assistant", "read"),
+        (3, "tool", "write"),
+        (4, "system", "search"),
+        (5, "tool", "none"),
+        (6, "user", "grep"),
+        (7, None, None),
+    ]
+    df = spark.createDataFrame(rows, "id int, role string, tool string")
+    out = enrich_stage(df, spark)
+    assert out.columns == ["id", "role", "tool", "role_class", "tool_family"]
+    for c in ("role_class", "tool_family"):
+        field = out.schema[c]
+        assert field.dataType.simpleString() == "string" and not field.nullable
+    got = {r["id"]: (r["role_class"], r["tool_family"]) for r in out.collect()}
+    assert got == {
+        i: (ROLE_D.get(role, "Unknown"), TOOL_D.get(tool, "Unknown"))
+        for i, role, tool in rows
+    }
+
+
+def test_default_driver_memory_fits_host(tmp_path):
+    from ilogtail_spark.session import default_driver_memory
+
+    def sized(kib):
+        p = tmp_path / "meminfo"
+        p.write_text(f"MemTotal:       {kib} kB\nMemFree:        1024 kB\n")
+        return default_driver_memory(str(p))
+
+    gib = 1024 * 1024
+    assert sized(16479424) == "7g"  # a 15.7 GiB host: half, rounded down
+    assert sized(2 * gib) == "1g"
+    assert sized(gib // 2) == "1g"  # never below 1g
+    assert sized(512 * gib) == "32g"  # never above the old default
+    assert default_driver_memory(str(tmp_path / "missing")) == "4g"
+
+
 def test_e2e_write_and_order(spark, sf_dir, tmp_path):
     routed = route_stage(enrich_stage(parse_stage(derive_transcripts(spark, sf_dir)), spark))
 

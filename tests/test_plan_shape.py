@@ -2,7 +2,8 @@
 
 These inspect `.explain` output rather than results: predicate
 pushdown reaches the parquet scan, the flagship pre-aggregation path
-is shuffle-free, enrichment is broadcast (never a shuffle join), and
+is shuffle-free, enrichment is a projection (no join, no exchange, no
+Python UDF), driver-side small tables are JVM local relations, and
 the dissect parse path contains no java.util.regex expression.
 """
 
@@ -40,11 +41,63 @@ def test_flagship_pre_agg_is_shuffle_free(spark, sf_dir):
             assert "REPARTITION" in line, f"unexpected shuffle: {line.strip()}"
 
 
-def test_enrich_is_broadcast_join(spark, sf_dir):
+def test_enrich_has_no_join(spark, sf_dir):
     df = enrich_stage(parse_stage(derive_transcripts(spark, sf_dir)), spark)
     plan = _plan(df)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    for token in ("Join", "Exchange", "EvalPython"):
+        assert token not in plan, f"{token} in enrich plan"
+
+
+def test_flagship_plan_has_no_join(spark, sf_dir):
+    df = enrich_stage(parse_stage(derive_transcripts(spark, sf_dir)), spark)
+    plan = _plan(route_stage(df))
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+
+
+def _is_local(df) -> bool:
+    plan = _plan(df)
+    return "LocalTableScan" in plan and "Scan ExistingRDD" not in plan
+
+
+def test_driver_side_tables_are_local_relations(spark, tmp_path):
+    """Small driver-side tables reach the JVM as LocalTableScan, not a
+    pickled Python RDD that each job reading it must unpickle."""
+    from ilogtail_spark.operators.registry import OPERATORS
+    from ilogtail_spark.operators.transform import load_geoip_csv
+    from ilogtail_spark.plans.metrics import StageMetrics
+
+    df = spark.range(1).select(F.lit("user").alias("role"))
+    dm = OPERATORS["processor_dict_map"](
+        MapDict={"user": "human"}, SourceKey="role", DestKey="role_class"
+    )
+    assert _is_local(dm(df)) and dm(df).first()["role_class"] == "human"
+
+    p = tmp_path / "ranges.csv"
+    p.write_text("ip_start,ip_end,country\n0,255,CN\n")
+    assert _is_local(load_geoip_csv(spark, str(p)))
+
+    m = StageMetrics()
+    assert _is_local(m.to_df(spark)) and m.to_df(spark).count() == 0
+    m.observe_stage(spark.range(3), "scan").count()
+    metrics = m.to_df(spark)
+    assert _is_local(metrics)
+    assert [tuple(r) for r in metrics.collect()] == [("scan", 3, None)]
+
+
+def test_local_df_ignores_arrow_conf(spark):
+    from ilogtail_spark.common import local_df
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    try:
+        for flag in ("true", "false"):
+            spark.conf.set(key, flag)
+            df = local_df(spark, [("a", 1), (None, None)], "k string, v long")
+            assert _is_local(df)
+            assert df.schema.simpleString() == "struct<k:string,v:bigint>"
+            assert [tuple(r) for r in df.collect()] == [("a", 1), (None, None)]
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_dissect_path_has_no_jvm_regex(spark, sf_dir):
