@@ -301,8 +301,11 @@ def timestamp_filter_native(
     if source_key is not None:
         if source_key not in df.columns:
             return df  # key missing everywhere: every row keeps
-        raw = F.col(source_key).try_cast("long")
-        parsed = F.col(source_key).isNotNull() & raw.isNotNull()
+        # std::from_chars takes only [-]digits: no sign '+', no
+        # surrounding whitespace, both of which try_cast accepts
+        key = F.col(source_key)
+        raw = F.when(key.rlike(r"^-?[0-9]+\z"), key.try_cast("long"))
+        parsed = raw.isNotNull()
         if p == "millisecond":
             val = raw * F.lit(1_000_000).cast("long")
         else:  # second compares the raw value; nanosecond is raw ns

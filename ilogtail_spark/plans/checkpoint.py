@@ -69,20 +69,17 @@ def run_with_checkpoint(
     num_buckets: int = 8,
     commit_dir: str | None = None,
     fail_after: int | None = None,
-    materialize_input: bool = True,
 ) -> dict:
     """Process bucket-by-bucket with commit-after-write.
 
-    materialize_input=True (default): ONE pass writes the input
-    partitioned by bucket (`_bucketed/_bucket=<b>/`), then every
-    per-bucket read is PARTITION-PRUNED — total input I/O is one scan
-    + one write + one pruned read per bucket, instead of
-    ``num_buckets`` full scans with a hash filter. The bucketed copy
-    is reused by a resumed run (it carries its own _SUCCESS marker),
-    so a killed job re-reads only uncommitted bucket directories —
-    the parquet rendering of Iceberg bucket-partition pruning.
-    materialize_input=False keeps the old filter-per-bucket path (no
-    extra storage; fine for tiny inputs).
+    ONE pass writes the input partitioned by bucket
+    (`_bucketed/_bucket=<b>/`), then every per-bucket read is
+    PARTITION-PRUNED — total input I/O is one scan + one write + one
+    pruned read per bucket, instead of ``num_buckets`` full scans with
+    a hash filter. The bucketed copy is reused by a resumed run (it
+    carries its own _SUCCESS marker), so a killed job re-reads only
+    uncommitted bucket directories — the parquet rendering of Iceberg
+    bucket-partition pruning.
 
     fail_after: test hook — raise after N successful bucket commits
     (simulates a mid-run kill for the resume test).
@@ -93,23 +90,20 @@ def run_with_checkpoint(
     commit_dir = commit_dir or os.path.join(out_dir, "_commits")
     log = CommitLog(commit_dir)
     done = log.committed_buckets()
-    bucketed = df.withColumn("_bucket", bucket_of(F.col(key_col), num_buckets))
-
-    if materialize_input:
-        bdir = os.path.join(out_dir, "_bucketed")
-        # the bucketed copy belongs to ONE logical run: reuse it only
-        # when actually resuming (commits exist); a fresh run always
-        # rewrites it from the passed df, so a changed input or a
-        # cleared commit log can never silently replay stale data
-        resuming = bool(done)
-        if not (resuming and os.path.exists(os.path.join(bdir, "_SUCCESS"))):
-            (
-                bucketed.repartition(num_buckets, F.col("_bucket"))
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(bdir)
-            )
-        bucketed = df.sparkSession.read.parquet(bdir)
+    bdir = os.path.join(out_dir, "_bucketed")
+    # the bucketed copy belongs to ONE logical run: reuse it only when
+    # actually resuming (commits exist); a fresh run always rewrites it
+    # from the passed df, so a changed input or a cleared commit log
+    # can never silently replay stale data
+    if not (done and os.path.exists(os.path.join(bdir, "_SUCCESS"))):
+        (
+            df.withColumn("_bucket", bucket_of(F.col(key_col), num_buckets))
+            .repartition(num_buckets, F.col("_bucket"))
+            .write.mode("overwrite")
+            .partitionBy("_bucket")
+            .parquet(bdir)
+        )
+    bucketed = df.sparkSession.read.parquet(bdir)
 
     processed, skipped = [], []
     for b in range(num_buckets):

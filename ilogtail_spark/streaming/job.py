@@ -101,11 +101,13 @@ def build_streaming_query(
 ):
     """parse → enrich → route inside foreachBatch, with a watermark
     standing in for processor_timestamp_filter_native's late-data
-    policy."""
+    policy. ``engine`` is ``parse_stage``'s: only "native" is valid."""
+    if engine != "native":
+        raise ValueError(f"build_streaming_query: the parse engine is 'native', got '{engine}'")
 
     def transform(batch_df: DataFrame) -> DataFrame:
         routed = route_stage(
-            enrich_stage(parse_stage(batch_df, engine=engine), spark)
+            enrich_stage(parse_stage(batch_df), spark)
         )
         return routed.sortWithinPartitions("conv_id", "turn_idx")
 

@@ -33,8 +33,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--replicate", type=int, default=1)
     ap.add_argument("--resume", action="store_true", help="bucket-wise checkpointed run (idempotent restart)")
     ap.add_argument("--num-buckets", type=int, default=8)
-    ap.add_argument("--engine", choices=["dissect", "native", "pandas"], default="dissect",
-                    help="parse path: structural dissect (scales best), JVM regexp_extract, or vectorized pandas UDF")
     ap.add_argument("--config", default=None,
                     help="reference-style YAML collection config: its processor+aggregator chain REPLACES the built-in parse/enrich stages (inputs ignored, external flushers skipped)")
     args = ap.parse_args(argv)
@@ -89,7 +87,7 @@ def main(argv: list[str] | None = None) -> None:
             if "__sink__" not in d.columns:
                 d = d.withColumn("__sink__", F.lit("default"))
             return d
-        d = parse_stage(d, engine=args.engine)
+        d = parse_stage(d)
         d = metrics.observe_stage(d, f"parse[{tag}]")
         d = enrich_stage(d, spark)
         return route_stage(d)

@@ -336,6 +336,18 @@ def test_ts_filter_invalid_and_missing_keep(spark):
     ).count() == 2
 
 
+def test_ts_filter_source_key_is_from_chars_exact(spark):
+    from ilogtail_spark.operators.filters import timestamp_filter_native
+
+    # std::from_chars rejects a '+' sign and surrounding whitespace, so
+    # those values are unparseable and keep; plain [-]digits are checked
+    df = spark.createDataFrame(
+        [(" 5",), ("+5",), ("5\n",), ("5",), ("-5",), ("15",)], "v string"
+    )
+    out = timestamp_filter_native(df, source_key="v", lower_bound=10)
+    assert sorted(r.v for r in out.collect()) == sorted([" 5", "+5", "5\n", "15"])
+
+
 def test_ts_filter_precisions(spark):
     from ilogtail_spark.operators.filters import timestamp_filter_native
 

@@ -212,6 +212,11 @@ def test_sls_pb_registry_and_invalid_drop(spark):
     rows = fn(df).collect()
     assert len(rows) == 1 and rows[0]["topic"] == "t"
     assert rows[0]["contents"] == {"k": "v"}
+    # next to a dropped invalid payload, a two-log group fans out to 2 rows
+    two = encode_message({"logs": [{"time": 1}, {"time": 2}]}, LOG_GROUP)
+    df = spark.createDataFrame(
+        [(1, two), (2, b"\xff\x07garbage")], "id long, pb binary")
+    assert len(fn(df).collect()) == 2
     with pytest.raises(ValueError):
         OPERATORS["processor_parse_from_pb_native"](Protocol="LoongSuite")
 

@@ -4,7 +4,8 @@ These inspect `.explain` output rather than results: predicate
 pushdown reaches the parquet scan, the flagship pre-aggregation path
 is shuffle-free, enrichment is a projection (no join, no exchange, no
 Python UDF), driver-side small tables are JVM local relations, and
-the dissect parse path contains no java.util.regex expression.
+the dissect parse path (``processor_parse_dissect``'s, not the
+flagship's) contains no java.util.regex expression.
 """
 
 from pyspark.sql import functions as F
@@ -100,21 +101,40 @@ def test_local_df_ignores_arrow_conf(spark):
         spark.conf.set(key, before)
 
 
+def _parse_dissect(df):
+    from ilogtail_spark.operators.parse import ParserOptions, parse_dissect
+    from ilogtail_spark.plans.pipeline import PARSE_TYPES
+    from ilogtail_spark.sources.transcripts import GROK_FIELDS, GROK_PATTERN
+
+    opts = ParserOptions(keep_source=True, keep_source_if_fail=True)
+    return parse_dissect(
+        df, GROK_PATTERN, GROK_FIELDS, source="text", types=PARSE_TYPES, options=opts
+    )
+
+
 def test_dissect_path_has_no_jvm_regex(spark, sf_dir):
-    df = parse_stage(derive_transcripts(spark, sf_dir), engine="dissect")
+    df = _parse_dissect(derive_transcripts(spark, sf_dir))
     plan = _plan(df)
     for token in ("regexp_extract", "RLike", "rlike"):
         assert token not in plan, f"java.util.regex op {token} in dissect plan"
 
 
-def test_dissect_plan_stays_small_under_filter_pushdown(spark, sf_dir):
+def _assert_plan_stays_small_under_filter_pushdown(parsed):
     from ilogtail_spark.operators.parse import PARSE_OK_KEY
 
-    df = parse_stage(derive_transcripts(spark, sf_dir)).filter(F.col(PARSE_OK_KEY))
+    df = parsed.filter(F.col(PARSE_OK_KEY))
     plan = _plan(df.groupBy("tool_call", "status").count())
     # regression guard: the naive rest-chaining formulation exploded to
     # a ~170 KB plan once filter pushdown substituted the chain
     assert len(plan) < 60_000, f"plan blew up to {len(plan)} chars"
+
+
+def test_dissect_plan_stays_small_under_filter_pushdown(spark, sf_dir):
+    _assert_plan_stays_small_under_filter_pushdown(_parse_dissect(derive_transcripts(spark, sf_dir)))
+
+
+def test_flagship_parse_plan_stays_small_under_filter_pushdown(spark, sf_dir):
+    _assert_plan_stays_small_under_filter_pushdown(parse_stage(derive_transcripts(spark, sf_dir)))
 
 
 def test_desensitize_md5_region_is_pure_jvm(spark):

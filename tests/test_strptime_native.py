@@ -107,6 +107,14 @@ def test_conv_num_rejections(spark):
         assert row[f"c{i}"]["ok"] is False, f"{inp!r} {fmt!r} should FAIL"
 
 
+def test_month_name_is_atomic(spark):
+    # find_string never retries a shorter name: once %B has taken
+    # "March" the literal "ch" has nothing left to match
+    row = _eval_structs(spark, [("March", "%Bch"), ("Mar", "%b"), ("March", "%B")])
+    assert row["c0"]["ok"] is False
+    assert row["c1"]["ok"] is True and row["c2"]["ok"] is True
+
+
 def test_flexible_width_leaves_rest(spark):
     # conv_num consumes the 2nd digit only when d1*10 <= ulim: "92" for
     # %m parses month 9 leaving "2" to the next literal
